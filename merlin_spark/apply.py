@@ -37,8 +37,11 @@ def route_ops(events: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 def collect_evolutions(evo: DataFrame) -> list[tuple[str, str]]:
     """Driver-side list of (column, ddl_type) in lsn order. `S` events
-    are ~0% of a log; this collect is bounded and tiny."""
-    got = evo.select("evo_column", "evo_type", "lsn").orderBy("lsn").collect()
+    are ~0% of a log; this collect is bounded and tiny, so the few rows
+    are sorted on the driver — an ``orderBy`` would add a range-partition
+    sampling job and a second pass over the batch."""
+    got = sorted(evo.select("evo_column", "evo_type", "lsn").collect(),
+                 key=lambda r: r.lsn)
     seen: dict[str, str] = {}
     for r in got:
         if r.evo_column and r.evo_column not in seen:

@@ -251,7 +251,7 @@ class BinlogStreamReader(DataSourceStreamReader):
         # across processes, and the source must not write to the log
         # directory it tails).
         self._prev: int | None = None
-        self._floor = 0  # highest engine-provided committed start seen
+        self._floor = 0  # highest engine-provided start seen (committed or WAL'd)
         _trace(f"__init__ path={self.path} cap={self.max_lsn_per_trigger}")
 
     def initialOffset(self) -> dict:

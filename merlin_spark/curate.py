@@ -52,7 +52,9 @@ def pack_pairs(pairs: DataFrame, budget: int = 512,
     (context+target token length), deterministic under (shard, conv_id,
     turn_idx) order — reproducible across reruns, resumable under
     incremental ingest."""
-    sz = (F.size(F.split("context", " ")) + F.col("n_tokens")).cast("long")
+    # split("") is [""], one token: a conversation's first pair has none
+    ctx = F.when(F.col("context") == "", 0).otherwise(F.size(F.split("context", " ")))
+    sz = (ctx + F.col("n_tokens")).cast("long")
     base = pairs.withColumn(
         "shard", F.substring(F.md5(F.col("conv_id")), 1, shard_chars)
     ).withColumn("pair_tokens", sz)

@@ -26,6 +26,18 @@ from .textnorm import normalize_str
 BASE_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 
+def lww_winners(changelog: pd.DataFrame) -> pd.DataFrame:
+    """One LWW winner row per (conv_id, turn_idx), delete tombstones
+    included — the rows a merge-on-read apply of the log writes."""
+    rows = changelog[changelog["op"].isin(["I", "U", "D"])]
+    # duplicate delivery: same lsn → identical row; keep one
+    rows = rows.drop_duplicates(subset=["lsn"])
+    # LWW: max (ts, lsn) per key — keep whole rows (groupby().last()
+    # would take last non-null PER COLUMN, mixing rows)
+    rows = rows.sort_values(["ts", "lsn"])  # ascending; last = winner
+    return rows.drop_duplicates(subset=["conv_id", "turn_idx"], keep="last")
+
+
 def expected_state(changelog: pd.DataFrame) -> pd.DataFrame:
     """Final table state after full replay, sorted (conv_id, turn_idx)."""
     df = changelog.copy()
@@ -33,13 +45,7 @@ def expected_state(changelog: pd.DataFrame) -> pd.DataFrame:
     evo = df[df["op"] == "S"].sort_values("lsn")
     evo_cols = list(dict.fromkeys(evo["evo_column"].tolist()))
 
-    rows = df[df["op"].isin(["I", "U", "D"])].copy()
-    # duplicate delivery: same lsn → identical row; keep one
-    rows = rows.drop_duplicates(subset=["lsn"])
-    # LWW: max (ts, lsn) per key — keep whole rows (groupby().last()
-    # would take last non-null PER COLUMN, mixing rows)
-    rows = rows.sort_values(["ts", "lsn"])  # ascending; last = winner
-    winners = rows.drop_duplicates(subset=["conv_id", "turn_idx"], keep="last")
+    winners = lww_winners(df)
     live = winners[winners["op"] != "D"].copy()
 
     live["text"] = live["text"].map(normalize_str)

@@ -49,7 +49,6 @@ from __future__ import annotations
 import functools
 import json
 import os
-import sys
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,6 +63,10 @@ BASE_SCHEMA_DDL = [(f.name, f.dataType.simpleString()) for f in TRANSCRIPT_FIELD
     (SYSTEM_LSN, "bigint"),
     (SYSTEM_OP, "string"),
 ]
+
+
+# files per task of the commit-stats footer job (see _collect_file_stats)
+_FOOTERS_PER_SLICE = 256
 
 
 def _bucket_col(n_buckets: int):
@@ -317,11 +320,11 @@ class IceboxSink:
                 yield rel, md.num_rows, conv, lsn
 
         sc = self.spark.sparkContext
-        # few fat slices, not one per file: each task handles a batch of
-        # footers (they are milliseconds each), so the job spins up at
-        # most 16 Python workers instead of one per file per commit
+        # one slice per _FOOTERS_PER_SLICE files: a footer read takes
+        # milliseconds, a task's Python-worker round trip far longer, so a
+        # 16-bucket commit reads its 16 footers in one task, not 16
         rows = (
-            sc.parallelize(rels, min(len(rels), 16))
+            sc.parallelize(rels, -(-len(rels) // _FOOTERS_PER_SLICE))
             .mapPartitions(_read_footers)
             .collect()
         )
@@ -347,8 +350,9 @@ class IceboxSink:
         staged files (GC'd by vacuum()).
 
         ``pre_stats``: per-file footer stats from _collect_file_stats —
-        pass them in when the caller already collected them (mor shares
-        one job with lineage); otherwise collected here. Either way the
+        pass them in when the caller already collected them (mor derives
+        its batch stats and lineage from the same job); otherwise
+        collected here (compact). Either way the
         commit path itself does only O(files) dict merges on the driver.
         """
         version = man["version"] + 1
@@ -512,10 +516,11 @@ class IceboxSink:
         """Merge-on-read apply: ONE pass over the batch.
 
         The winners pipeline (normalize UDF → LWW shuffle) executes
-        exactly once, driven by the bucketed write; batch stats ride
-        along via ``DataFrame.observe`` (no cache, no second job, no
-        executor storage-memory spike at large batch sizes). Per-bucket
-        lineage stats come from the written parquet footers — free
+        exactly once, driven by the bucketed write (no cache, no second
+        job, no executor storage-memory spike at large batch sizes).
+        The batch's row count and lsn range, the manifest's per-file key
+        stats and the per-bucket lineage all come from ONE footer job
+        over the written files (:meth:`_collect_file_stats`) — free
         metadata reads, the same trick Iceberg manifests use.
 
         Optimistic concurrency: mor commits only APPEND file versions,
@@ -527,54 +532,19 @@ class IceboxSink:
         stale file set — the conflict propagates and Structured
         Streaming re-executes the batch from the new state.)
         """
-        from pyspark.sql import Observation
-
         from .apply import to_stored
 
-        obs = Observation()
-        observed = winners.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.min("lsn").alias("lo"),
-            F.max("lsn").alias("hi"),
-        )
         new_files = self._write_buckets(
-            to_stored(observed), None, n_parts=self.n_buckets
+            to_stored(winners), None, n_parts=self.n_buckets
         )
-        try:
-            got = obs.get
-        except Exception as e:
-            # Observation.get sporadically dies with a JVM
-            # `java.lang.AssertionError` from PythonSQLUtils.toPyRow
-            # (observed-metrics row arrives without a schema — a race
-            # in Spark's observation machinery under load, hit ~1-in-4
-            # by the 10^7 kill-9 soak's resumed run with a second JVM
-            # on the host). The write above already succeeded, so the
-            # batch must NOT die for a stats read: the written parquet
-            # footers are the same numbers from a source that cannot
-            # race. Fall back to them.
-            print(f"[icebox] Observation.get failed ({e!r}); "
-                  "using parquet-footer batch stats", file=sys.stderr)
-            got = None
-        # ONE executor-parallel footer job feeds both the manifest's
-        # per-file key stats (via _commit) and the per-bucket lineage
-        if got is not None and not got["n"]:
-            new_files = {}
         pre_stats = self._collect_file_stats(new_files)
-        stats = self._footer_stats(new_files, pre_stats) if new_files else []
-        if got is None:
-            got = {
-                "n": sum(int(r["n"]) for r in stats),
-                "lo": min((int(r["lo"]) for r in stats if r["lo"] >= 0),
-                          default=None),
-                "hi": max((int(r["hi"]) for r in stats if r["hi"] >= 0),
-                          default=None),
-            }
-            if not got["n"]:
-                new_files, stats = {}, []
-        lo = got["lo"] if new_files else None
-        hi = got["hi"] if new_files else None
-        n_rows = int(got["n"]) if new_files else man.get("total_rows", 0)
+        stats = self._footer_stats(new_files, pre_stats)
+        n = sum(r["n"] for r in stats)
+        if not n:
+            new_files, stats = {}, []
+        lo = min((r["lo"] for r in stats if r["lo"] >= 0), default=None)
+        hi = max((r["hi"] for r in stats if r["hi"] >= 0), default=None)
+        n_rows = n if new_files else man.get("total_rows", 0)
         for _attempt in range(10):
             try:
                 new_man = self._commit(man, new_files, batch_id, lo, hi,

@@ -83,6 +83,11 @@ def test_pack_assignment_is_deterministic_and_exhaustive(spark, replayed):
     a = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     b = pdf2.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
+    # pandas mirror of the pair size: a conversation's first pair has
+    # an empty context, which holds no tokens
+    ctx_tokens = a["context"].map(lambda c: len(c.split(" ")) if c else 0)
+    assert (a["context"] == "").any()
+    assert (a["pair_tokens"] == ctx_tokens + a["n_tokens"]).all()
     # running-sum contract: within a shard, offsets advance by the
     # previous pair's token length modulo the budget boundary
     one = a[a["shard"] == a["shard"].iloc[0]].sort_values(

@@ -8,12 +8,14 @@ schema-evolution semantics, and compaction must not change the state.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 
 from merlin_spark.apply import table_view
 from merlin_spark.fixtures import ChangelogSpec, gen_changelog, write_segments
-from merlin_spark.oracle import expected_state
+from merlin_spark.oracle import expected_state, lww_winners
 from merlin_spark.sink import IceboxSink
 from merlin_spark.stream import StreamConfig, replay
 
@@ -297,37 +299,104 @@ def test_lsn_hi_is_monotone_high_water_under_out_of_order_batches(
     assert sink.manifest()["lsn_hi"] == max_lsn
 
 
-def test_mor_apply_survives_observation_get_failure(
-    spark, tmp_path, log, monkeypatch
-):
-    """Observation.get sporadically dies with a JVM AssertionError from
-    PythonSQLUtils.toPyRow (schema-less metrics row — an upstream race
-    hit by the 10^7 kill-9 soak's resumed run under host load). The
-    batch write has already succeeded at that point, so the apply must
-    fall back to parquet-footer stats instead of failing the stream.
-    Forces the failure on every batch and requires identical manifest
-    bookkeeping and table state."""
-    from py4j.protocol import Py4JJavaError
-    from pyspark.sql import Observation
+def test_mor_commit_stats_match_oracle(spark, tmp_path, log):
+    """A mor batch's row count and lsn range, and its per-bucket lineage
+    rows, come only from the footers of the files it wrote. They must
+    equal the oracle's winner count and lsn range, overall and per
+    bucket. An empty batch still commits (ledger) but adds no files,
+    keeps the table's marks and writes no lineage."""
+    from pyspark.sql import functions as F
 
     from merlin_spark.changelog import read_batch
-    from merlin_spark.fixtures import write_segments
+    from merlin_spark.lineage import read_lineage
 
     write_segments(log, str(tmp_path / "log"), n_segments=2)
-
-    def _boom(self):
-        raise RuntimeError(
-            "java.lang.AssertionError: assertion failed (simulated "
-            "PythonSQLUtils.toPyRow observation race)"
-        )
-
-    monkeypatch.setattr(Observation, "get", property(_boom))
-    sink = IceboxSink(spark, str(tmp_path / "table"), n_buckets=4, mode="mor")
+    table = str(tmp_path / "table")
+    sink = IceboxSink(spark, table, n_buckets=4, mode="mor")
     sink.apply(read_batch(spark, str(tmp_path / "log")), 0)
     man = sink.manifest()
-    assert man["lsn_hi"] == int(log["lsn"].max())
-    assert man["total_rows"] > 0
-    monkeypatch.undo()
+    win = lww_winners(log)
+    assert man["total_rows"] == len(win)
+    assert man["lsn_lo_batch"] == int(win["lsn"].min())
+    assert man["lsn_hi"] == int(win["lsn"].max())
 
-    got = _final(spark, str(tmp_path / "table"))
-    _assert_state(got, expected_state(log))
+    # per bucket, with the writer's own bucket expression
+    b_of = (
+        spark.createDataFrame(win[["conv_id"]].drop_duplicates())
+        .select("conv_id",
+                F.pmod(F.xxhash64("conv_id"), F.lit(4)).cast("int").alias("bucket"))
+        .toPandas()
+    )
+    exp = win.merge(b_of, on="conv_id").groupby("bucket")["lsn"].agg(
+        ["size", "min", "max"])
+    lin = read_lineage(spark, table).toPandas().set_index("bucket").sort_index()
+    assert (lin["batch_id"] == 0).all()
+    assert lin.index.tolist() == exp.index.tolist()
+    assert lin["n_rows"].tolist() == exp["size"].tolist()
+    assert lin["lsn_lo"].tolist() == exp["min"].tolist()
+    assert lin["lsn_hi"].tolist() == exp["max"].tolist()
+
+    # empty batch: no files, marks and row count carried forward
+    empty = read_batch(spark, str(tmp_path / "log"),
+                       lsn_from=int(log["lsn"].max()) + 1)
+    after = sink.apply(empty, 1)
+    assert after["version"] == man["version"] + 1
+    assert after["files"] == man["files"]
+    assert after["total_rows"] == len(win)
+    assert after["lsn_hi"] == man["lsn_hi"]
+    assert after["lsn_lo_batch"] is None
+    assert "default:1" in after["applied"]
+    assert set(read_lineage(spark, table).toPandas()["batch_id"]) == {0}
+    _assert_state(_final(spark, table), expected_state(log))
+
+
+def test_footer_job_is_sized_by_file_count(spark, tmp_path, monkeypatch):
+    """The commit-stats footer job runs one slice per 256 files: a
+    16-bucket commit reads its 16 footers in ONE task of ONE job, 300
+    files take 2 slices."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import SparkContext
+
+    slices = []
+    orig = SparkContext.parallelize
+
+    def spy(self, c, numSlices=None):
+        slices.append(numSlices)
+        return orig(self, c, numSlices)
+
+    monkeypatch.setattr(SparkContext, "parallelize", spy)
+    sink = IceboxSink(spark, str(tmp_path / "table"), n_buckets=16, mode="mor")
+
+    def files(n):
+        rels = []
+        for i in range(n):
+            rel = f"data/stage-t{n}/b=0/part-{i:05d}.parquet"
+            os.makedirs(os.path.dirname(os.path.join(sink.path, rel)), exist_ok=True)
+            pq.write_table(pa.table({"conv_id": [f"c{i:05d}", f"c{i:05d}z"],
+                                     "_lsn": pa.array([i, i + 1], pa.int64())}),
+                           os.path.join(sink.path, rel))
+            rels.append(rel)
+        return {"0": rels}
+
+    sc = spark.sparkContext
+    sc.setJobGroup("footer-sizing", "footer job sizing test")
+    try:
+        got = sink._collect_file_stats(files(16))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("footer-sizing")
+    assert len(jobs) == 1
+    stages = sc.statusTracker().getJobInfo(jobs[0]).stageIds
+    assert [sc.statusTracker().getStageInfo(s).numTasks for s in stages] == [1]
+    assert slices == [1]
+    assert len(got) == 16
+    assert all(st["rows"] == 2 for st in got.values())
+
+    slices.clear()
+    got = sink._collect_file_stats(files(300))
+    assert slices == [2]
+    assert len(got) == 300
+    one = got["data/stage-t300/b=0/part-00299.parquet"]
+    assert one["conv"] == ("c00299", "c00299z") and one["lsn"] == (299, 300)

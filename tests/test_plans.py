@@ -120,3 +120,34 @@ def test_epoch_shuffle_has_no_global_sort(spark, sf_dir):
     mean a driver-sampled total sort that serializes at 10^10 packs."""
     p = _plan(registry.QUERIES["shuffle_for_training"](spark, sf_dir))
     assert "rangepartitioning" not in p.lower()
+
+
+def test_collect_evolutions_sorts_on_driver(spark, monkeypatch):
+    """collect_evolutions returns each column's first `S` event by lsn
+    without a Spark sort: an ``orderBy`` would plan a rangepartitioning
+    exchange, i.e. a sampling job and a second pass over the batch."""
+    from merlin_spark.apply import collect_evolutions, route_ops
+
+    # S rows in descending lsn order over 4 partitions; every column
+    # recurs, and its latest (highest-lsn) events say `int`, which must lose
+    evo_rows = [(1000 - i, f"c{i % 3}", "int" if i < 3 else "string")
+                for i in range(12)]
+    events = spark.createDataFrame(
+        [(lsn, "S", col, ty) for lsn, col, ty in evo_rows]
+        + [(2000 + i, "I", None, None) for i in range(8)],
+        "lsn long, op string, evo_column string, evo_type string",
+    ).repartition(4)
+    collected = []
+    orig = type(events).collect
+
+    def spy(self):
+        collected.append(self)
+        return orig(self)
+
+    monkeypatch.setattr(type(events), "collect", spy)
+    got = collect_evolutions(route_ops(events)[1])
+    monkeypatch.undo()
+
+    assert got == [("c2", "string"), ("c1", "string"), ("c0", "string")]
+    assert len(collected) == 1
+    assert "rangepartitioning" not in _plan(collected[0]).lower()

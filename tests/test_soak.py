@@ -65,7 +65,8 @@ def test_ten_million_event_kill9_resume_convergence(spark, source):
     Parametrized over both sources because their resume machinery is
     disjoint: files = SS file-source metadata log + availableNow
     replan; binlog = the custom Python DataSource's LSN-position
-    offsets + capped processingTime drain + the r4 offset-floor clamp.
+    offsets + capped processingTime drain + the position floor that
+    guards latestOffset against regressing (it never clamps delivery).
     The files variant's first run caught the lsn_hi backward-march
     (see _commit)."""
     import glob
