@@ -11,13 +11,11 @@ Two measurements (BASELINE.json:2 metric definition, SURVEY.md §6):
    replay it through the real streaming path — ``readStream`` →
    ``foreachBatch`` → IceboxSink transactional MERGE — with
    ``trigger(availableNow=True)`` until converged. Reports wall-time and
-   change-events/sec. Each repeat is PROBE-GATED (VERDICT r3 task #4):
-   the host-health probe (bench/host_probe.py) runs before each rep; a
-   rep only counts toward best-of when the 8-proc copy-bandwidth probe
-   clears ``MERLIN_BENCH_PROBE_FLOOR`` GB/s (this sandbox's bandwidth
-   swings ~60× minute-to-minute — BENCH/BASELINE.md host-noise dossier).
-   If no window clears after bounded retries, best-of-all is reported
-   and ``quiet: false`` tags the line.
+   change-events/sec. ``replay_sec`` is the MEDIAN wall of the
+   ``MERLIN_BENCH_REPEATS`` reps (``statistics.median_low``: the lower
+   middle rep for an even count), so one slow or fast rep does not set
+   the figure; every rep's wall goes to the BENCH/ file. Per-layer costs are perfbench's job
+   (``perfbench/run.py --trace 1``).
 2. **Headline queries**: every `queries()` qkey at ``$SPARK_GRAFT_SF_DIR``
    (default /root/testdata/sf0.1), each forced via the noop writer (full
    execution, no driver collect); per-query seconds written to
@@ -30,14 +28,6 @@ Env knobs:
   MERLIN_BENCH_QUERIES      comma-list filter    (default: all registered)
   MERLIN_SKIP_REPLAY        "1" → queries only
   MERLIN_BENCH_REPEATS      measured reps        (default 3)
-  MERLIN_BENCH_PROBE_FLOOR  warm-copy GB/s floor (default 10.0; 0 disables
-                            THIS gate only — steal and cold-fill gates
-                            below stay active unless also zeroed)
-  MERLIN_BENCH_STEAL_MAX    hypervisor steal %% ceiling (default 10.0; 0 off)
-  MERLIN_BENCH_COLD_FLOOR   fresh-page fill GB/s floor, worst worker
-                            (default 2.0; 0 off)
-  MERLIN_BENCH_PROBE_TRIES  probes per rep       (default 6)
-  MERLIN_BENCH_PROBE_WAIT   secs between probes  (default 15)
   MERLIN_BENCH_TAG          BENCH/queries_<tag>.json name (default r05)
 """
 
@@ -46,15 +36,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _HERE)
-sys.path.insert(0, os.path.join(_HERE, "bench"))
-
-from host_probe import healthy, probe  # noqa: E402
 
 from merlin_spark.fixtures import gen_changelog_spark  # noqa: E402
 from merlin_spark.session import get_spark  # noqa: E402
@@ -70,31 +58,6 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _gated_probe(floor: float, tries: int, wait_s: float) -> tuple[dict, bool]:
-    """Probe the host until the warm-page copy-bandwidth floor clears
-    AND hypervisor steal drops under the ceiling, or patience runs out.
-    Returns (last probe dict, cleared?). Two gates because they catch
-    different host failure modes (r4 measurement): cold-page
-    provisioning stalls depress bandwidth (the probe now measures warm
-    pages, so a low reading means the host genuinely can't stream), and
-    steal% is the hypervisor denying us cycles outright — replay wall
-    scales with both."""
-    steal_max = float(os.environ.get("MERLIN_BENCH_STEAL_MAX", "10.0"))
-    cold_floor = float(os.environ.get("MERLIN_BENCH_COLD_FLOOR", "2.0"))
-    last: dict = {}
-    for attempt in range(max(1, tries)):
-        last = probe(spin_s=1.0, bw_s=1.5)
-        if healthy(last, bw_floor=floor, steal_max=steal_max,
-                   cold_floor=cold_floor):
-            return last, True
-        _log(f"[bench] host noisy (warm {last.get('copy_bw_gbs')} GB/s "
-             f"vs floor {floor}, steal {last.get('steal_pct')}% vs max "
-             f"{steal_max}%, cold-min {last.get('cold_min_gbs')} GB/s vs "
-             f"floor {cold_floor}); retry {attempt + 1}/{tries} in {wait_s}s")
-        time.sleep(wait_s)
-    return last, False
-
-
 def run_replay_bench(spark, n_events: int, cpus: int) -> dict:
     # tmpfs workdir when available: in local mode the single shared
     # virtual disk is an artifact of the sandbox (a real cluster's
@@ -103,9 +66,6 @@ def run_replay_bench(spark, n_events: int, cpus: int) -> dict:
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
     work = tempfile.mkdtemp(prefix="merlin-bench-", dir=shm)
     log_path = os.path.join(work, "changelog")
-    floor = float(os.environ.get("MERLIN_BENCH_PROBE_FLOOR", "10.0"))
-    tries = int(os.environ.get("MERLIN_BENCH_PROBE_TRIES", "6"))
-    wait_s = float(os.environ.get("MERLIN_BENCH_PROBE_WAIT", "15"))
     try:
         n_convs = max(1000, n_events // 500)  # ~500 events/conversation
         n_segments = max(32, cpus * 2)
@@ -125,9 +85,8 @@ def run_replay_bench(spark, n_events: int, cpus: int) -> dict:
         from merlin_spark.session import prewarm_python_workers
 
         prewarm_python_workers(spark)  # worker fork + imports ≠ replay cost
-        reps: list[dict] = []
+        walls: list[float] = []
         for rep in range(repeats):
-            pr, cleared = _gated_probe(floor, tries, wait_s)
             cfg = StreamConfig(
                 log_path=log_path,
                 table_path=os.path.join(work, f"table{rep}"),
@@ -146,24 +105,18 @@ def run_replay_bench(spark, n_events: int, cpus: int) -> dict:
 
                 IceboxSink(spark, cfg.table_path, cfg.n_buckets).compact()
             wall = time.monotonic() - t0
-            reps.append({"wall_sec": round(wall, 3), "quiet": cleared,
-                         "probe": pr})
-            _log(f"[bench] replay rep{rep}: {wall:.1f}s "
-                 f"(probe {pr.get('copy_bw_gbs')} GB/s, quiet={cleared})")
+            walls.append(round(wall, 3))
+            _log(f"[bench] replay rep{rep}: {wall:.1f}s")
             shutil.rmtree(cfg.table_path, ignore_errors=True)
             shutil.rmtree(cfg.checkpoint_path, ignore_errors=True)
-        quiet_reps = [r for r in reps if r["quiet"]]
-        pool = quiet_reps or reps
-        best = min(pool, key=lambda r: r["wall_sec"])
+        median = statistics.median_low(walls)
         return {
-            "replay_sec": best["wall_sec"],
-            "events_per_sec": round(n_events / best["wall_sec"], 1),
+            "replay_sec": median,
+            "events_per_sec": round(n_events / median, 1),
             "sink_mode": sink_mode,
             "n_events": n_events,
-            "quiet": bool(quiet_reps),
-            "probe_gbs": best["probe"].get("copy_bw_gbs"),
             # full per-rep detail goes to the BENCH/ file, not stdout
-            "_reps": reps,
+            "_reps": walls,
             "_gen_sec": round(gen_s, 3),
         }
     finally:
@@ -200,8 +153,8 @@ def main() -> None:
     except ValueError:
         sf = None
 
-    # per-query map + per-rep probe detail → file (driver tail capture
-    # is ~2000 chars; stdout stays compact)
+    # per-query map + per-rep walls → file, so the stdout line stays
+    # compact (see the module docstring)
     qfile = os.path.join(_HERE, "BENCH", f"queries_{tag}.json")
     os.makedirs(os.path.dirname(qfile), exist_ok=True)
     with open(qfile, "w") as f:
@@ -234,7 +187,7 @@ def main() -> None:
         # overlong final line; degrade to the core fields instead
         core = {k: out.get(k) for k in
                 ("metric", "value", "unit", "sf", "cpus", "replay_sec",
-                 "events_per_sec", "quiet", "queries_file")}
+                 "events_per_sec", "queries_file")}
         line = json.dumps(core)
     print(line, flush=True)
 

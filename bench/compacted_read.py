@@ -13,8 +13,7 @@ script records the number at the 2M-event bench shape:
   3. compact() (timed, for context), then time the same forced read
      again — the resolved-flag fast path (plain scan, no shuffle).
 
-Each timing is best-of-``--repeats`` with a host probe tag per rep
-(this sandbox's bandwidth swings ~60×; see BENCH/BASELINE.md).
+Each timing is best-of-``--repeats``.
 Prints one JSON line and writes BENCH/COMPACTED_READ_<tag>.md.
 
 Usage: python bench/compacted_read.py [--events 2000000] [--repeats 3]
@@ -32,9 +31,6 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "bench"))
-
-from host_probe import probe  # noqa: E402
 
 from merlin_spark.fixtures import gen_changelog_spark  # noqa: E402
 from merlin_spark.session import get_spark, prewarm_python_workers  # noqa: E402
@@ -47,16 +43,12 @@ def _log(m: str) -> None:
 
 
 def _timed_read(spark, sink: IceboxSink, repeats: int) -> dict:
-    walls, probes = [], []
+    walls = []
     for _ in range(repeats):
-        pr = probe(spin_s=0.5, bw_s=1.0)
         t0 = time.monotonic()
         sink.read_live().write.format("noop").mode("overwrite").save()
         walls.append(round(time.monotonic() - t0, 3))
-        probes.append(pr.get("copy_bw_gbs"))
-    best = min(range(len(walls)), key=lambda i: walls[i])
-    return {"best_sec": walls[best], "all_sec": walls,
-            "probe_gbs": probes[best], "probes": probes}
+    return {"best_sec": min(walls), "all_sec": walls}
 
 
 def main() -> None:
@@ -101,11 +93,11 @@ def main() -> None:
         _log("[cread] timing COMPACTED read (resolved-flag fast path)")
         co = _timed_read(spark, sink, args.repeats)
 
-        total_rows = sink.manifest()["total_rows"]
+        live_rows = sink.read_live().count()
         out = {
             "n_events": args.events,
             "cpus": args.cpus,
-            "table_rows": total_rows,
+            "table_rows": live_rows,
             "n_commits_before_compact": n_versions,
             "uncompacted_read_sec": un["best_sec"],
             "compacted_read_sec": co["best_sec"],
@@ -119,13 +111,13 @@ def main() -> None:
             f.write(f"""# Compacted vs uncompacted mor read — {args.events:,}-event bench shape
 
 After the standard 4-micro-batch replay (mor, {cfg.n_buckets} buckets,
-{n_versions} commits, {total_rows:,} live rows), a full forced read
-(noop writer, best of {args.repeats} probe-tagged reps, tmpfs):
+{n_versions} commits, {live_rows:,} live rows), a full forced read
+(noop writer, best of {args.repeats} reps, tmpfs):
 
-| state | read wall (s) | probe GB/s at best rep |
-|---|---|---|
-| uncompacted (LWW key-hash shuffle + max_by resolve) | {un['best_sec']} | {un['probe_gbs']} |
-| compacted (`resolved` manifest flag → plain scan) | {co['best_sec']} | {co['probe_gbs']} |
+| state | read wall (s) |
+|---|---|
+| uncompacted (LWW key-hash shuffle + max_by resolve) | {un['best_sec']} |
+| compacted (`resolved` manifest flag → plain scan) | {co['best_sec']} |
 
 **Speedup {out['speedup']}×** (r3 measured 2.8× at 200k rows; this is
 the recorded number at the bench shape). `compact()` itself cost

@@ -114,12 +114,6 @@ def main() -> None:
                     "--cores", str(n),
                 ])
                 res["total_submit_sec"] = round(time.monotonic() - t0, 1)
-                try:  # annotate the measurement window's host condition
-                    from host_probe import probe
-
-                    res["host"] = probe(spin_s=2.0, bw_s=2.0)
-                except Exception:
-                    pass
                 print(f"[scaling] local[{n}] rep{rep}: {res}",
                       file=sys.stderr, flush=True)
                 if n not in results or res["wall_sec"] < results[n]["wall_sec"]:

@@ -79,12 +79,6 @@ def main() -> None:
                     elif cap:
                         job += ["--max-lsn-per-trigger", str(cap)]
                     res = submit(f"local[{n}]", pyfiles, job)
-                    try:
-                        from host_probe import probe
-
-                        res["host"] = probe(spin_s=2.0, bw_s=2.0)
-                    except Exception:
-                        pass
                     print(f"[srcladder] {fmt} local[{n}] rep{rep}: {res}",
                           file=sys.stderr, flush=True)
                     key = (fmt, n)

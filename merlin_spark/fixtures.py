@@ -282,8 +282,6 @@ def gen_changelog_spark(spark, n_events: int, n_convs: int, out_path: str,
                 "evo_type": pd.Series([None] * m, dtype=object),
                 "extra": pd.Series([None] * m, dtype=object),
             })
-            out.loc[d, "turn_idx"] = None
-            out["turn_idx"] = out["turn_idx"].astype("Int32")
             yield out
 
     (spark.range(0, n_events, numPartitions=n_segments)

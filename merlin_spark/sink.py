@@ -33,8 +33,9 @@ interface:
   A snapshot manifest records: live files per bucket, current schema,
   the (batch_id, lsn range) ledger for idempotence, row counts, and the
   parent version. Commit = write data files → write manifest to a temp
-  name → ``os.rename`` (atomic on POSIX) → done. Readers list
-  ``snapshots/`` and take max N: they never see a partial commit.
+  name → ``os.link`` it to v{N}.json (atomic, and exclusive on POSIX)
+  → done. Readers list ``snapshots/`` and take max N: they never see a
+  partial commit.
 
 Scale design: the table is hash-bucketed on conv_id (pmod(xxhash64)),
 the Iceberg bucket transform's moral equivalent. A micro-batch only
@@ -79,25 +80,6 @@ class CommitConflictError(RuntimeError):
     table state and retry or abort."""
 
 
-def _atomic_publish(tmp: str, final: str) -> None:
-    """Publish a manifest EXCLUSIVELY: os.link fails with EEXIST if the
-    target version was already committed by a concurrent writer (a plain
-    rename would silently clobber their commit — lost update). The tmp
-    file is always cleaned up."""
-    try:
-        os.link(tmp, final)
-    except FileExistsError as e:
-        raise CommitConflictError(
-            f"snapshot {os.path.basename(final)} already committed by a "
-            "concurrent writer"
-        ) from e
-    finally:
-        try:
-            os.remove(tmp)
-        except OSError:
-            pass
-
-
 class IceboxSink:
     """Snapshot-manifest transactional sink (Iceberg-equivalent commits)."""
 
@@ -132,13 +114,16 @@ class IceboxSink:
 
     # ------------------------------------------------------------ state
 
-    def current_version(self) -> int:
-        snaps = [
+    def _versions(self) -> list[int]:
+        """Committed snapshot versions, ascending."""
+        return sorted(
             int(f[1:-5])
             for f in os.listdir(os.path.join(self.path, "snapshots"))
             if f.startswith("v") and f.endswith(".json")
-        ]
-        return max(snaps, default=-1)
+        )
+
+    def current_version(self) -> int:
+        return max(self._versions(), default=-1)
 
     def manifest(self, version: int | None = None) -> dict:
         v = self.current_version() if version is None else version
@@ -226,12 +211,12 @@ class IceboxSink:
         bucket's files (manifest-level pruning — at thousands of buckets
         this is the Iceberg bucket-transform point-read path). The
         bucket is computed with the SAME Spark expression the writer
-        uses (a one-row JVM job), so it can never drift from the
-        layout."""
+        uses (``_bucket_col``, in a one-row JVM job), so it can never
+        drift from the layout."""
         b = (
             self.spark.range(1)
-            .select(F.pmod(F.xxhash64(F.lit(conv_id)), F.lit(self.n_buckets))
-                    .cast("int").alias("b"))
+            .select(F.lit(conv_id).alias("conv_id"))
+            .select(_bucket_col(self.n_buckets).alias("b"))
             .collect()[0]["b"]
         )
         df = self.read(buckets=[int(b)], key=conv_id)
@@ -248,6 +233,10 @@ class IceboxSink:
         bucket → relative paths. repartition on the bucket column =
         the key-partitioned write (BASELINE.json:6); sortWithinPartitions
         gives (conv_id, turn_idx) file locality for later scans.
+        Every bucket in ``touched`` gets an entry: one whose rows all
+        vanished (all deleted, or ``compact(drop_tombstones=True)`` on a
+        fully-tombstoned bucket) writes no output dir, and its empty
+        entry is what drops its OLD files from the manifest.
         ``touched=None`` (mor fast path) sizes the exchange from
         ``n_parts`` and discovers touched buckets from the written dirs."""
         stage = f"data/stage-{uuid.uuid4().hex[:12]}"
@@ -270,6 +259,8 @@ class IceboxSink:
                 for f in os.listdir(os.path.join(out, bdir))
                 if f.endswith(".parquet")
             ]
+        for b in touched or []:
+            files.setdefault(str(b), [])
         return files
 
     def _collect_file_stats(self, new_files: dict[str, list[str]]) -> dict:
@@ -345,9 +336,9 @@ class IceboxSink:
                 batch_id: int, lsn_lo, lsn_hi, n_rows: int,
                 append: bool = False, pre_stats: dict | None = None,
                 resolved: bool = False) -> dict:
-        """Atomic snapshot swap. POSIX rename gives all-or-nothing
-        visibility; a crash before the rename leaves only unreferenced
-        staged files (GC'd by vacuum()).
+        """Atomic snapshot swap (:meth:`_publish`). The exclusive link
+        gives all-or-nothing visibility; a crash before it leaves only
+        unreferenced staged files (GC'd by vacuum()).
 
         ``pre_stats``: per-file footer stats from _collect_file_stats —
         pass them in when the caller already collected them (mor derives
@@ -414,14 +405,34 @@ class IceboxSink:
             "total_rows": int(n_rows),
             "n_buckets": self.n_buckets,
         }
-        tmp = os.path.join(self.path, "snapshots", f".tmp-v{version}-{uuid.uuid4().hex[:8]}.json")
-        final = os.path.join(self.path, "snapshots", f"v{version}.json")
-        with open(tmp, "w") as f:
-            json.dump(new_man, f)
-            f.flush()
-            os.fsync(f.fileno())
-        _atomic_publish(tmp, final)  # raises CommitConflictError if taken
+        self._publish(new_man)
         return new_man
+
+    def _publish(self, man: dict) -> None:
+        """Publish ``man`` as snapshot v{version} EXCLUSIVELY: write a
+        tmp file, fsync it, then os.link it to the final name. The link
+        fails with EEXIST if a concurrent writer already committed that
+        version (a plain rename would silently clobber their commit —
+        lost update), which raises CommitConflictError. The tmp file is
+        always cleaned up."""
+        snaps = os.path.join(self.path, "snapshots")
+        version = man["version"]
+        tmp = os.path.join(snaps, f".tmp-v{version}-{uuid.uuid4().hex[:8]}.json")
+        try:
+            with open(tmp, "w") as f:
+                json.dump(man, f)
+                f.flush()
+                os.fsync(f.fileno())
+            os.link(tmp, os.path.join(snaps, f"v{version}.json"))
+        except FileExistsError as e:
+            raise CommitConflictError(
+                f"snapshot v{version} already committed by a concurrent writer"
+            ) from e
+        finally:
+            try:
+                os.remove(tmp)
+            except OSError:
+                pass
 
     # ---------------------------------------------------------- evolve
 
@@ -496,10 +507,6 @@ class IceboxSink:
         stored = self.read(buckets=touched, man=man)
         merged = merge_state(stored, winners.drop("_b"))
         new_files = self._write_buckets(merged, touched)
-        # buckets that end up empty (all rows deleted) need their old
-        # files dropped even though no new file was written
-        for b in touched:
-            new_files.setdefault(str(b), [])
         winners.unpersist()
 
         n_rows = sum(
@@ -695,14 +702,7 @@ class IceboxSink:
         new_man["version"] = cur["version"] + 1
         new_man["parent"] = cur["version"]
         new_man["rolled_back_to"] = version
-        tmp = os.path.join(self.path, "snapshots",
-                           f".tmp-v{new_man['version']}-{uuid.uuid4().hex[:8]}.json")
-        final = os.path.join(self.path, "snapshots", f"v{new_man['version']}.json")
-        with open(tmp, "w") as f:
-            json.dump(new_man, f)
-            f.flush()
-            os.fsync(f.fileno())
-        _atomic_publish(tmp, final)
+        self._publish(new_man)  # CommitConflictError if v{N} is taken
         return new_man
 
     # ------------------------------------------------------ maintenance
@@ -718,14 +718,7 @@ class IceboxSink:
         df = self.read(man=man)
         if drop_tombstones:
             df = df.where(F.col(SYSTEM_OP) != "D")
-        all_buckets = [int(b) for b in man["files"]]
-        new_files = self._write_buckets(df, all_buckets or [0])
-        # a bucket whose rows all vanished (e.g. drop_tombstones on a
-        # fully-tombstoned bucket) writes no output dir — it still needs
-        # an (empty) manifest entry or its OLD files stay referenced and
-        # survive the very compaction meant to GC them
-        for b in all_buckets:
-            new_files.setdefault(str(b), [])
+        new_files = self._write_buckets(df, [int(b) for b in man["files"]])
         return self._commit(man, new_files, man["batch_id"], None, man.get("lsn_hi"),
                             man.get("total_rows", 0), resolved=True)
 
@@ -738,13 +731,8 @@ class IceboxSink:
         snapshot. The current snapshot is never expired."""
         keep_last = max(1, keep_last)
         snap_dir = os.path.join(self.path, "snapshots")
-        versions = sorted(
-            int(f[1:-5])
-            for f in os.listdir(snap_dir)
-            if f.startswith("v") and f.endswith(".json")
-        )
         removed = 0
-        for v in versions[:-keep_last]:
+        for v in self._versions()[:-keep_last]:
             os.remove(os.path.join(snap_dir, f"v{v}.json"))
             removed += 1
         return removed

@@ -69,7 +69,7 @@ def _checkpoint_epoch(checkpoint_path: str) -> str:
             f.write(epoch)
             f.flush()
             os.fsync(f.fileno())
-        # EXCLUSIVE publish (same pattern as sink._atomic_publish): an
+        # EXCLUSIVE publish (same pattern as IceboxSink._publish): an
         # os.rename here would be last-writer-wins — starter A could read
         # back its own epoch just before B's rename replaced the marker,
         # leaving two live epochs and un-gating the ledger between them.

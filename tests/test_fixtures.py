@@ -48,3 +48,33 @@ def test_normalize_str_spec():
     assert normalize_str("x\x07y") == "xy"
     assert normalize_str("  pad  ") == "pad"
     assert normalize_str(None) is None
+
+
+def test_spark_changelog_deletes_hit_live_rows(spark, tmp_path):
+    """Bench-scale generator: deletes keep their drawn turn_idx (null
+    only for `S` events, FIXTURES.md), so they can remove rows an
+    earlier insert/update wrote, and the batch replay of the log still
+    equals the pandas oracle."""
+    from merlin_spark.apply import replay_batch, table_view
+    from merlin_spark.fixtures import gen_changelog_spark
+    from merlin_spark.oracle import expected_state
+
+    out = gen_changelog_spark(spark, 3000, 20, str(tmp_path / "log"),
+                              seed=5, n_segments=2)
+    events = spark.read.parquet(out)
+    log = events.toPandas()
+
+    rows = log[log["op"].isin(["I", "U", "D"])]
+    assert rows["turn_idx"].notna().all()
+    writes = rows[rows["op"] != "D"]
+    first_write = writes.groupby(["conv_id", "turn_idx"])["lsn"].min()
+    dels = rows[rows["op"] == "D"].join(first_write.rename("first_lsn"),
+                                        on=["conv_id", "turn_idx"])
+    assert (dels["first_lsn"] < dels["lsn"]).any()
+
+    state, evolved = replay_batch(events)
+    got = table_view(state, evolved).toPandas().reset_index(drop=True)
+    exp = expected_state(log)
+    assert len(exp) < len(first_write)  # some deletes removed live rows
+    assert list(got.columns) == list(exp.columns)
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False)

@@ -46,6 +46,26 @@ def test_commit_is_exclusive_not_clobbering(spark, tmp_path):
         sink._commit(dict(man), {}, 0, None, None, 0)
 
 
+def test_rollback_is_exclusive_not_clobbering(spark, tmp_path, monkeypatch):
+    """A rollback shares the commit's publish step: if its target
+    version was committed after it read the current snapshot, it raises
+    CommitConflictError, the winner's manifest stays as it was, and no
+    tmp manifest is left behind."""
+    sink = IceboxSink(spark, str(tmp_path / "t"), n_buckets=4)
+    sink._commit(sink.manifest(), {}, 0, None, None, 0)  # v0
+    sink._commit(sink.manifest(), {}, 1, None, None, 0)  # v1
+    snaps = tmp_path / "t" / "snapshots"
+    v1 = (snaps / "v1.json").read_bytes()
+    real = sink.manifest
+    # the rollback reads the current snapshot as it was before v1 landed
+    monkeypatch.setattr(sink, "manifest",
+                        lambda version=None: real(0 if version is None else version))
+    with pytest.raises(CommitConflictError, match="concurrent writer"):
+        sink.rollback(0)
+    assert (snaps / "v1.json").read_bytes() == v1
+    assert sorted(os.listdir(snaps)) == ["v0.json", "v1.json"]
+
+
 def test_mor_apply_rebases_on_conflict(spark, tmp_path):
     """mor commits are append-only, so losing the version race is
     resolved by re-reading the current manifest and re-attaching the
